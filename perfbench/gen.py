@@ -157,45 +157,35 @@ def text_tables(seed):
             "embeddings": emb_table(np.arange(VECTORS), v, labels)}, v
 
 
-def dashboard_serve(seed, out, clients, k):
+def dashboard_serve(seed, out, cycles, k):
     tables, _ = warehouse(seed)
     text, v = text_tables(seed)
     tables.update(text)
     write_sf(tables, os.path.join(out, "sf"))
     r = rng(seed, 90)
     search = [" ".join(VOCAB[i] for i in r.integers(0, len(VOCAB) // 3, r.integers(2, 4)))
-              for _ in range(3)]
-    knn = [int(i) for i in r.choice(np.arange(GIVEN_CENTROIDS, VECTORS), 3, replace=False)]
+              for _ in range(2)]
+    knn = [int(i) for i in r.choice(np.arange(GIVEN_CENTROIDS, VECTORS), 2, replace=False)]
     series = [[f"NATION_{r.integers(NATIONS)}", PRIORITIES[r.integers(5)]] for _ in range(2)]
     questions = [f"how did NATION_{r.integers(NATIONS)} change for priority "
                  f"{PRIORITIES[r.integers(5)][0]}" for _ in range(2)]
-    # request kinds and their weights in one 50-request cycle:
-    # dashboard 36%, insights 12%, chatbot 8%, search 24%, knn 12%,
-    # forecast 8%
-    reqs = ([[f"b{i}", 0, 3] for i in range(1, 7)]
-            + [["rising", 0, 2], ["insight", 0, 2], ["chat_intent", 0, 2]]
-            + [["chat", i, 2] for i in range(len(questions))]
-            + [["tfidf", i, 2] for i in range(len(search))]
-            + [["bm25", i, 2] for i in range(len(search))]
-            + [["knn", i, 2] for i in range(len(knn))]
-            + [["forecast", i, 2] for i in range(len(series))])
-    # stride schedule: each kind's requests sit evenly spaced around
-    # the cycle (a kind's parameters take turns), so the requests in
-    # flight at any time hold the kinds close to their weights; the
-    # clients take the cycle's requests in turn from a seeded start, and
-    # a window serves whole cycles, so every window's mix is the same
-    kinds = {}
-    for i, (kind, _, w) in enumerate(reqs):
-        ids, weight = kinds.get(kind, ([], 0))
-        kinds[kind] = (ids + [i], weight + w)
-    slots = []
-    for n, (ids, w) in enumerate(kinds.values()):
-        phase = (n * 0.6180339887) % 1.0
-        slots += [((j + phase) / w, ids[j % len(ids)]) for j in range(w)]
-    cycle = [e for _, e in sorted(slots)]
-    start = int(rng(seed, 100).integers(0, len(cycle)))
-    return {"requests": [[kind, arg] for kind, arg, _ in reqs], "clients": clients,
-            "cycle": cycle[start:] + cycle[:start],
+    # the distinct requests; the traffic mix is an assumption (no
+    # traffic data exists): every cycle holds each request once, in a
+    # seeded order, and a run serves `cycles` whole cycles after a
+    # warm-up of one request of each kind
+    reqs = ([[f"b{i}", 0] for i in range(1, 7)]
+            + [["rising", 0], ["insight", 0], ["chat_intent", 0]]
+            + [["chat", i] for i in range(len(questions))]
+            + [["tfidf", i] for i in range(len(search))]
+            + [["bm25", i] for i in range(len(search))]
+            + [["knn", i] for i in range(len(knn))]
+            + [["forecast", i] for i in range(len(series))])
+    first = {}
+    for i, (kind, _) in enumerate(reqs):
+        first.setdefault(kind, i)
+    order = rng(seed, 100)
+    return {"requests": reqs, "warm": list(first.values()),
+            "order": [int(i) for _ in range(cycles) for i in order.permutation(len(reqs))],
             "search": search, "knn": knn, "series": series, "questions": questions,
             "intent": "which urgent series is rising fastest?",
             "knn_brute": brute_topk(np.arange(VECTORS), v, knn, k),
@@ -208,16 +198,15 @@ def grams(t):
     return {t[i:i + 5] for i in range(len(t) - 4)}
 
 
-def corpus_dedup(seed, out, n, batches):
-    """n seeded documents, then planted copies appended with fresh ids:
-    3% of the base as exact copies and 3% as near-duplicates that
-    re-draw ~5% of their words and alter word 2, so no near-duplicate
-    is exact. The plants carry their char-5-gram Jaccard to the
-    original. The batch job then loads the warehouse: see
-    warehouse_load."""
-    base = documents(seed, 20, 0, n)
+def corpus(seed, salt, n, sf):
+    """n seeded documents under `sf`, then planted copies appended with
+    fresh ids: 3% of the base as exact copies and 3% as near-duplicates
+    that re-draw ~5% of their words and alter word 2, so no
+    near-duplicate is exact. The plants carry their char-5-gram Jaccard
+    to the original."""
+    base = documents(seed, salt, 0, n)
     texts = base.column("text").to_pylist()
-    bucket = rng(seed, 50).integers(0, 100, n)
+    bucket = rng(seed, salt + 1).integers(0, 100, n)
     rows = {c: base.column(c).to_pylist() for c in base.column_names}
     plants = []
     for i in np.nonzero(bucket < 6)[0]:
@@ -227,7 +216,7 @@ def corpus_dedup(seed, out, n, batches):
             kind, t = "exact", texts[i]
         else:
             kind = "near"
-            swap = rng(seed, 1000 + i)
+            swap = np.random.Generator(np.random.PCG64([seed, salt + 2, i]))
             for j in range(len(ws)):
                 if j == 1:
                     ws[j] = ws[j] + "q"
@@ -242,9 +231,15 @@ def corpus_dedup(seed, out, n, batches):
     write_sf({"documents": pa.table({
         "doc_id": pa.array(rows["doc_id"], pa.int64()), "text": rows["text"],
         "lang": rows["lang"], "source": rows["source"],
-        "n_chars": pa.array(rows["n_chars"], pa.int64())})}, os.path.join(out, "sf"))
+        "n_chars": pa.array(rows["n_chars"], pa.int64())})}, sf)
     return {"docs": len(rows["doc_id"]), "plants": plants,
-            "text_bytes": sum(len(t.encode()) for t in rows["text"]),
+            "text_bytes": sum(len(t.encode()) for t in rows["text"])}
+
+
+def corpus_dedup(seed, out, n, batches):
+    """The corpus of the pass under <out>/corpus (see corpus), then the
+    warehouse the batch job loads: see warehouse_load."""
+    return {"corpus": corpus(seed, 20, n, os.path.join(out, "corpus")),
             "warehouse": warehouse_load(seed, out, batches)}
 
 

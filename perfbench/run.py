@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Run one workload of the graft benchmark.
 
-    python3 perfbench/run.py --workload dashboard_serve --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload dashboard_serve --seed 1 --seconds 60 --trace 0
 
 Run from the repository root. Builds the library and the benchmark if
 their sources changed (perfbench/build.py), starts one JVM with Spark
 local[nproc], generates the seeded inputs under perfbench/.work, runs
-the workload for --seconds, checks every answer, and prints an info
+the workload's fixed amount of work (--seconds caps the window),
+checks every answer, and prints an info
 line and then the result JSON as the last line of standard output.
 Exits non-zero if any answer was wrong or the run failed.
 """
@@ -37,12 +38,11 @@ ADD_OPENS = [
 ]
 
 
-def gen_params(workload, cpus):
-    """Input sizes: dashboard_serve runs one closed-loop client per core
-    (at most 4); corpus_dedup passes over 3k documents plus plants,
-    then applies 5 warehouse load batches."""
-    return {"dashboard_serve": {"clients": min(4, cpus), "k": 10},
-            "corpus_dedup": {"n": 3000, "batches": 5}}[workload]
+# Input sizes: dashboard_serve serves 2 cycles of its distinct
+# requests; corpus_dedup applies 12 warehouse load batches, then passes
+# over a corpus of 3k documents plus plants.
+GEN_PARAMS = {"dashboard_serve": {"cycles": 2, "k": 10},
+              "corpus_dedup": {"n": 3000, "batches": 12}}
 
 
 def main():
@@ -63,13 +63,14 @@ def main():
     os.makedirs(spans, exist_ok=True)
     cpus = len(os.sched_getaffinity(0))
     t0 = time.time()
-    gen.generate(a.workload, a.seed, data, **gen_params(a.workload, cpus))
+    gen.generate(a.workload, a.seed, data, **GEN_PARAMS[a.workload])
     gen_s = time.time() - t0
     # every scratch location points inside the work directory
     tmp = os.path.join(work, "tmp")
-    # fixed heap and young generation: the resident set then follows
-    # the program's live data, not the collector's sizing decisions
-    cmd =(["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Xmn{YOUNG}", "-XX:-UsePerfData"]
+    # fixed heap and young generation, so the collector behaves alike
+    # from run to run; memory is reported as live data after a full
+    # collection (live_mb), not as resident set, which a fixed heap pins
+    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Xmn{YOUNG}", "-XX:-UsePerfData"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-Dspark.ui.enabled=false",
               "-Dspark.sql.session.timeZone=UTC",

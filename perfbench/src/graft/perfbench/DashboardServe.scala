@@ -13,16 +13,15 @@ import graft.sim.{IndexStore, Ivf}
 import graft.sources.Tables
 import graft.text.{Bm25, Tfidf}
 
-/** dashboard_serve — a closed loop of `clients` users, each sending
-  * its next request when the previous answer arrives and taking it
-  * from one shared request cycle, over artifacts built and warmed at
-  * setup: the memoized
-  * observations panel and trend stats, the saved TF-IDF, BM25 and IVF
-  * indexes and the fitted Holt horizons. The seeded mix covers
-  * Dashboard B1-B6, Insights, Chatbot (both intents), saved TF-IDF
-  * and BM25 search, saved IVF knn and one-series forecasts. Every
-  * answer is compared with a reference computed once after setup from
-  * un-memoized or fresh paths.
+/** dashboard_serve — a closed loop of one user, who sends the next
+  * request of a seeded order when the previous answer arrives, over
+  * artifacts built and warmed at setup: the memoized observations
+  * panel and trend stats, the saved TF-IDF, BM25 and IVF indexes and
+  * the fitted Holt horizons. The order holds whole cycles of the
+  * distinct requests, each once a cycle: Dashboard B1-B6, Insights,
+  * Chatbot (both intents), saved TF-IDF and BM25 search, saved IVF knn
+  * and one-series forecasts. Every answer is compared with a reference
+  * computed once at setup from un-memoized or fresh paths.
   */
 final class DashboardServe(ctx: Ctx) extends Workload {
   import DashboardServe._
@@ -34,8 +33,6 @@ final class DashboardServe(ctx: Ctx) extends Workload {
   private val bm25Dir = s"${ctx.work}/bm25"
   private val ivfDir = s"${ctx.work}/ivf"
 
-  val tailQuantile = 0.8
-
   private def strings(key: String): IndexedSeq[String] =
     sched.get(key).asScala.map(_.asText).toIndexedSeq
   private val searchPool = strings("search")
@@ -46,8 +43,8 @@ final class DashboardServe(ctx: Ctx) extends Workload {
     .toIndexedSeq
   private val requests = sched.get("requests").asScala.map(r => Req(r.get(0).asText, r.get(1).asInt))
     .toIndexedSeq
-  private val clients = sched.get("clients").asInt
-  private val cycle = sched.get("cycle").asScala.map(_.asInt).toIndexedSeq
+  private val warm = sched.get("warm").asScala.map(_.asInt).toIndexedSeq
+  private val order = sched.get("order").asScala.map(_.asInt).toIndexedSeq
 
   def setup(): Unit = {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
@@ -56,15 +53,25 @@ final class DashboardServe(ctx: Ctx) extends Workload {
       () => { Observations.panel(spark, sf).count(); Insights.trendStats(spark, sf).count() },
       () => Tfidf.save(Tfidf.index(docs, "doc_id", "text"), tfidfDir),
       () => IndexStore.saveGiven(Tables.embeddings(spark, sf).select("vec_id", "embedding"),
-        ivfDir)))
-    Bm25.save(spark, docs, "doc_id", "text", bm25Dir)
+        ivfDir),
+      () => Bm25.save(spark, docs, "doc_id", "text", bm25Dir)))
     Main.log("built")
-    // warm-up: every request kind once (fills the memos, compiles plans)
-    graft.Par.jobs(requests.groupBy(_.kind).values.map(_.head).toSeq
-      .map(r => () => serve(r).collect()))
-    ctx.info ++= Seq("rows" -> Json.Raw(sched.get("rows").toString),
+    // the reference answers and the warm-up, side by side: a request
+    // of each kind fills the memos, compiles the plans and lets the JIT
+    // reach the serving paths; its answers are checked once the
+    // references are in
+    val warmAnswers = TrieMap.empty[Int, Seq[Row]]
+    graft.Par.jobs(truthJobs() ++ warm.indices.map(i => () =>
+      warmAnswers(i) = serve(requests(warm(i))).collect().toSeq))
+    truth(Req("chat_intent", 0)) = truth(Req("rising", 0))
+    warm.indices.foreach { i =>
+      val r = requests(warm(i))
+      ctx.call(layerOf(r.kind), r.kind)(warmAnswers(i))(check(r, _))
+    }
+    ctx.info ++= Seq("rows" -> sched.get("rows"),
       "input_bytes" -> Stats.bytes(sf), "distinct_requests" -> requests.size,
-      "clients" -> clients, "cycle_requests" -> cycle.size, "knn_k" -> K)
+      "clients" -> 1, "warm_requests" -> warm.size, "window_requests" -> order.size,
+      "knn_k" -> K)
   }
 
   /** The served call for a request. */
@@ -98,7 +105,8 @@ final class DashboardServe(ctx: Ctx) extends Workload {
   private val truth = TrieMap.empty[Req, Seq[Row]]
   private var trendTruth: Map[(String, String), Row] = Map.empty
 
-  def prepareTruth(): Unit = {
+  /** The jobs that fill `truth` and `trendTruth`. */
+  private def truthJobs(): Seq[() => Unit] = {
     // built once for the reference queries, apart from the panel memo
     val b = Observations.build(spark, sf).localCheckpoint(true)
     val ref = new DashboardReference(b)
@@ -121,8 +129,7 @@ final class DashboardServe(ctx: Ctx) extends Workload {
         put(Req("forecast", i))(Forecast.holtForecast(b)
           .filter(col("geo") === g && col("indicator") === ind).orderBy("year"))
       }
-    graft.Par.jobs(jobs)
-    truth(Req("chat_intent", 0)) = truth(Req("rising", 0))
+    jobs
   }
 
   private def check(r: Req, got: Seq[Row]): Boolean = r.kind match {
@@ -146,47 +153,34 @@ final class DashboardServe(ctx: Ctx) extends Workload {
     case _ => got == truth(r)
   }
 
+  /** The closed loop of one client: it sends the order's next request
+    * when the previous answer arrives, until the order is served;
+    * `seconds` is only a ceiling, past which no request starts.
+    */
   def run(): Units = {
     val start = System.nanoTime()
     val deadline = start + ctx.seconds * 1000000000L
-    val served = new java.util.concurrent.atomic.AtomicLong(0)
-    val hits = new java.util.concurrent.atomic.AtomicLong(0)
-    val total = new java.util.concurrent.atomic.AtomicLong(0)
-    val lastDone = new java.util.concurrent.atomic.AtomicLong(start)
     val brute = sched.get("knn_brute")
-    // the clients take the cycle's requests in turn; the window ends at
-    // the first cycle boundary after `seconds`, so it serves whole
-    // cycles and every window holds the same mix
-    var next = 0
-    def take(): Int = synchronized {
-      if (next > 0 && next % cycle.size == 0 && System.nanoTime() >= deadline) -1
-      else { next += 1; next - 1 }
-    }
-    val threads = (0 until clients).map { c =>
-      new Thread(() => {
-        var i = take()
-        while (i >= 0) {
-          ctx.setTraceFor(System.nanoTime() - start)
-          val r = requests(cycle(i % cycle.size))
-          ctx.call(layerOf(r.kind), r.kind, ctx.newRequest())(serve(r).collect().toSeq)(
-            check(r, _)).foreach { got =>
-            if (r.kind == "knn") {
-              val want = brute.get(knnPool(r.arg).toString).asScala.map(_.asLong).toSet
-              hits.addAndGet(got.count(x => want(x.getAs[Long]("neighbor_id"))).toLong)
-              total.addAndGet(want.size.toLong)
-            }
-          }
-          served.incrementAndGet()
-          lastDone.accumulateAndGet(System.nanoTime(), math.max)
-          i = take()
+    var hits, total = 0L
+    var served = 0
+    while (served < order.size && System.nanoTime() < deadline) {
+      // a traced run traces each distinct request in one of the two
+      // cycles and not in the other, so every request kind has both
+      // sides of the overhead
+      if (ctx.trace) ctx.tracer.on = (order(served) + served / requests.size) % 2 == 1
+      val r = requests(order(served))
+      ctx.call(layerOf(r.kind), r.kind, ctx.newRequest())(serve(r).collect().toSeq)(
+        check(r, _)).foreach { got =>
+        if (r.kind == "knn") {
+          val want = brute.get(knnPool(r.arg).toString).asScala.map(_.asLong).toSet
+          hits += got.count(x => want(x.getAs[Long]("neighbor_id")))
+          total += want.size
         }
-      }, s"client-$c")
+      }
+      served += 1
     }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    ctx.layerMetrics("sim.knn_recall_at_k") =
-      if (total.get == 0) 0.0 else hits.get.toDouble / total.get
-    Units(served.get.toDouble, (lastDone.get - start) / 1e9)
+    ctx.layerMetrics("sim.knn_recall_at_k") = if (total == 0) 0.0 else hits.toDouble / total
+    Units(served.toDouble, (System.nanoTime() - start) / 1e9)
   }
 }
 

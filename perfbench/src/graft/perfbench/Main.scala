@@ -56,12 +56,6 @@ final class Ctx(val spark: SparkSession, val seconds: Int, val trace: Boolean,
     ops.add(Op(layer, name, ns, traced, !good))
     r.toOption
   }
-
-  /** Tracing toggles by quarter of the window in a traced run (off,
-    * on, off, on), so one run yields both sides of the overhead.
-    */
-  def setTraceFor(elapsedNs: Long): Unit =
-    if (trace) tracer.on = ((elapsedNs * 4L / (seconds * 1000000000L)) % 2L) == 1L
 }
 
 /** Entry: `--workload <name> --seed <n> --seconds <s> --trace <0|1>
@@ -96,48 +90,54 @@ object Main {
     val t0 = System.nanoTime()
     wl.setup()
     val buildS = (System.nanoTime() - t0) / 1e9
+    // calls made in set-up are checked and counted, but timed only
+    // into setup_s
+    val warmOps = ctx.ops.asScala.toSeq
+    ctx.ops.clear()
     log("setup")
-    wl.prepareTruth()
-    log("reference answers")
     val t1 = System.nanoTime()
     val units = wl.run()
     val windowS = (System.nanoTime() - t1) / 1e9
     ctx.tracer.on = false
+    val liveMb = Stats.liveMb()
     log("window")
 
     val ops = ctx.ops.asScala.toSeq
     val untraced = ops.filterNot(_.traced)
-    val failed = ops.count(_.failed)
-    val attempted = ops.size
+    val failed = (warmOps ++ ops).count(_.failed)
+    val attempted = warmOps.size + ops.size
     ctx.checkFailures.asScala.take(20).foreach(m => System.err.println(s"[check] $m"))
-    val lat = untraced.map(_.ns / 1e6).sorted
+    val lat = untraced.filter(wl.inLatency).map(_.ns / 1e6).sorted
     val setupS = opts("gen-s").toDouble + sessionS + buildS
     val metrics: Seq[(String, Double, String)] =
       if (!trace) Seq(
         ("setup_s", setupS, "s"),
-        ("peak_rss_mb", Stats.peakRssMb(), "MB"),
+        ("live_mb", liveMb, "MB"),
         ("ok_rate", 1.0 - failed.toDouble / math.max(1, attempted), "ok/op"),
         ("op_p50_ms", Stats.quantile(lat, 0.5), "ms"),
-        ("op_tail_ms", Stats.quantile(lat, wl.tailQuantile), "ms"),
+        ("op_tail_ms", Stats.quantile(lat, Stats.tailQuantile(lat.size)), "ms"),
         ("work_per_s", units.work / units.busyS, "1/s"))
       else new Report(ctx).perLayer(ops)
 
     ctx.info ++= Seq("workload" -> workload, "seed" -> opts("seed").toLong,
       "seconds" -> seconds, "trace" -> trace, "gen_s" -> opts("gen-s").toDouble,
-      "session_s" -> sessionS, "build_warm_s" -> buildS, "window_s" -> windowS,
-      "ops" -> ops.size, "untraced_ops" -> untraced.size, "tail_quantile" -> wl.tailQuantile,
-      "work_units" -> units.work, "work_busy_s" -> units.busyS)
+      "session_s" -> sessionS, "build_s" -> buildS, "window_s" -> windowS,
+      "warm_ops" -> warmOps.size, "ops" -> ops.size, "untraced_ops" -> untraced.size,
+      "latency_ops" -> lat.size, "tail_quantile" -> Stats.tailQuantile(lat.size),
+      "work_units" -> units.work, "work_busy_s" -> units.busyS, "live_mb" -> liveMb,
+      "op_ms" -> ops.map(o => s"${o.name}:${o.ns / 1000000}").mkString(" "))
     if (trace) {
       ctx.tracer.dump(opts("spans"))
       ctx.info("spans") = opts("spans")
     }
-    println("[info] " + Json.obj(ctx.info.toSeq))
+    val json = new ObjectMapper()
+    println("[info] " + json.writeValueAsString(ctx.info.asJava))
     val correct = failed == 0
-    println(Json.obj(Seq(
+    println(json.writeValueAsString(mutable.LinkedHashMap[String, Any](
       "correct" -> correct, "attempted" -> attempted, "failed" -> failed,
-      "metrics" -> Json.Raw(Json.obj(metrics.map { case (n, v, u) =>
-        n -> Json.Raw(Json.obj(Seq("value" -> v, "unit" -> u)))
-      })))))
+      "metrics" -> mutable.LinkedHashMap(metrics.map { case (n, v, u) =>
+        n -> Map("value" -> v, "unit" -> u).asJava
+      }: _*).asJava).asJava))
     System.out.flush()
     spark.stop()
     if (!correct) System.exit(1)
@@ -150,18 +150,15 @@ object Main {
 final case class Units(work: Double, busyS: Double)
 
 trait Workload {
-  /** Build the artifacts the window runs against from the generated
-    * inputs, then warm every call path once.
+  /** Everything before the window: build the artifacts it runs against
+    * from the generated inputs, compute the reference answers of the
+    * checks, and warm the window's call paths with untimed calls.
     */
   def setup(): Unit
-  /** Reference answers for the checks, outside setup_s. */
-  def prepareTruth(): Unit
   /** The measured window. */
   def run(): Units
-  /** The highest quantile of op latency with at least ten samples
-    * beyond it at this workload's op count.
-    */
-  def tailQuantile: Double
+  /** Whether a call's latency enters op_p50_ms and op_tail_ms. */
+  def inLatency(op: Op): Boolean = true
 }
 
 object Stats {
@@ -176,18 +173,22 @@ object Stats {
 
   def median(xs: Seq[Double]): Double = quantile(xs.sorted, 0.5)
 
-  /** High-water resident set of this process (VmHWM), in MB. */
-  def peakRssMb(): Double = {
-    val f = new java.io.File("/proc/self/status")
-    if (!f.exists()) Runtime.getRuntime.totalMemory() / 1048576.0
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().collectFirst {
-        case l if l.startsWith("VmHWM:") =>
-          l.split("\\s+")(1).toDouble / 1024.0
-      }.getOrElse(0.0)
-      finally src.close()
-    }
+  /** The highest quantile of `n` samples with at least ten samples
+    * beyond it.
+    */
+  def tailQuantile(n: Int): Double = math.max(0.5, (n - 11).toDouble / math.max(1, n - 1))
+
+  /** Live memory in MB: heap in use right after a full collection,
+    * plus non-heap in use (metaspace, code cache). The first
+    * collection lets Spark's cleaner drop the blocks of unreachable
+    * checkpoints, the second frees them.
+    */
+  def liveMb(): Double = {
+    System.gc()
+    Thread.sleep(500)
+    System.gc()
+    val mem = java.lang.management.ManagementFactory.getMemoryMXBean
+    (mem.getHeapMemoryUsage.getUsed + mem.getNonHeapMemoryUsage.getUsed) / 1048576.0
   }
 
   /** Bytes under a local directory. */
@@ -197,28 +198,4 @@ object Stats {
       else f.length()
     walk(new java.io.File(path))
   }
-}
-
-/** Minimal JSON writer for the result lines. */
-object Json {
-  final case class Raw(s: String)
-
-  def value(v: Any): String = v match {
-    case Raw(s) => s
-    case d: Double =>
-      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case b: Boolean => b.toString
-    case s: Seq[_] => s.map(value).mkString("[", ", ", "]")
-    case other => "\"" + other.toString.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-  }
-
-  def obj(kv: Seq[(String, Any)]): String =
-    kv.map { case (k, v) => value(k) + ": " + value(v) }.mkString("{", ", ", "}")
 }

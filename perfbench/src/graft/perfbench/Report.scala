@@ -1,7 +1,7 @@
 package graft.perfbench
 
 /** Per-layer metrics of a traced run, from the spans of its traced
-  * quarters and the listener's task counters. Every listed metric is
+  * calls and the listener's task counters. Every listed metric is
   * reported on every workload; a layer the workload never calls
   * reads 0.
   */
@@ -11,13 +11,11 @@ final class Report(ctx: Ctx) {
   private def p50ms(ops: Seq[Op], pred: Op => Boolean): Double =
     Stats.quantile(ops.filter(pred).map(_.ns / 1e6).sorted, 0.5)
 
-  /** Median over traced passes of the summed latency of the named
-    * stage calls, in seconds (corpus_dedup).
+  /** Summed latency of the named stage calls of the pass, in seconds
+    * (corpus_dedup).
     */
-  private def perPass(ops: Seq[Op], names: Set[String]): Double = {
-    val hits = ops.filter(o => names(o.name)).map(_.ns / 1e9)
-    if (hits.isEmpty) 0.0 else Stats.median(hits.grouped(names.size).map(_.sum).toSeq)
-  }
+  private def stageS(ops: Seq[Op], names: Set[String]): Double =
+    ops.filter(o => names(o.name)).map(_.ns).sum / 1e9
 
   def perLayer(allOps: Seq[Op]): Seq[(String, Double, String)] = {
     val ops = allOps.filter(_.traced)
@@ -67,12 +65,12 @@ final class Report(ctx: Ctx) {
       ("text.search_p50_ms", p50ms(ops, o => Set("tfidf", "bm25", "search")(o.name)), "ms"),
       ("sim.knn_p50_ms", p50ms(ops, _.name == "knn"), "ms"),
       ("forecast.series_p50_ms", p50ms(ops, _.name == "forecast"), "ms"),
-      ("text.analyze_s", perPass(ops, Set("langid", "quality")), "s"),
-      ("dedup.neardup_index_s", perPass(ops, Set("neardup_index")), "s"),
-      ("dedup.simhash_s", perPass(ops, Set("simhash")), "s"),
-      ("dedup.ngram_s", perPass(ops, Set("ngram")), "s"),
-      ("dedup.clusters_s", perPass(ops, Set("clusters")), "s"),
-      ("pipeline.clean_s", perPass(ops, Set("clean", "decontaminate")), "s"),
+      ("text.analyze_s", stageS(ops, Set("langid", "quality")), "s"),
+      ("dedup.neardup_index_s", stageS(ops, Set("neardup_index")), "s"),
+      ("dedup.simhash_s", stageS(ops, Set("simhash")), "s"),
+      ("dedup.ngram_s", stageS(ops, Set("ngram")), "s"),
+      ("dedup.clusters_s", stageS(ops, Set("clusters")), "s"),
+      ("pipeline.clean_s", stageS(ops, Set("clean", "decontaminate")), "s"),
       ("etl.load_p50_ms", p50ms(ops, _.name == "load"), "ms"),
       ("relational.apply_p50_ms", p50ms(ops, _.name == "apply"), "ms"),
       ("relational.read_p50_ms", p50ms(ops, _.name == "read_current"), "ms"),

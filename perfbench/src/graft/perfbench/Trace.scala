@@ -91,11 +91,13 @@ final class Tracer(sc: SparkContext) {
 
   /** Write every span, one JSON object a line. */
   def dump(path: String): Unit = {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
     val w = new java.io.PrintWriter(path, "UTF-8")
     try spans.sortBy(_.start).foreach { s =>
-      w.println(s"""{"id":${s.id},"name":"${s.name}","layer":"${s.layer}",""" +
-        s""""start_ns":${s.start},"end_ns":${s.end},"parent":${s.parent},""" +
-        s""""request":${s.request},"failed":${s.failed}}""")
+      w.println(json.writeValueAsString(mutable.LinkedHashMap[String, Any](
+        "id" -> s.id, "name" -> s.name, "layer" -> s.layer, "start_ns" -> s.start,
+        "end_ns" -> s.end, "parent" -> s.parent, "request" -> s.request,
+        "failed" -> s.failed).asJava))
     } finally w.close()
   }
 }

@@ -48,10 +48,13 @@ def main():
             if p.returncode != 0:
                 sys.stderr.write(p.stderr[-3000:])
                 sys.exit(f"{wl} seed {s}: exit {p.returncode}")
-            res = json.loads(p.stdout.strip().splitlines()[-1])
+            lines = p.stdout.strip().splitlines()
+            res = json.loads(lines[-1])
+            info = [json.loads(l[len("[info] "):]) for l in lines if l.startswith("[info] ")]
             if a.out:
                 with open(a.out, "a") as fh:
                     fh.write(json.dumps({"workload": wl, "seed": s, "wall_s": wall,
+                                         "info": info[0] if info else None,
                                          "result": res}) + "\n")
             for k, v in res["metrics"].items():
                 values.setdefault(k, []).append(v["value"])
